@@ -543,7 +543,7 @@ def bench_gstream(spark, sf_dir: str, batch_points: int = 100, n_batches: int = 
 def bench_estep_distributed(spark, sf_dir: str, n_nodes: int = 50):
     """Distributed E-step throughput on one LARGE batch (the 100 TB
     path): all lineitem rows as 4-d points against a 50-node model via
-    mapInPandas + broadcast.  Returns (seconds, points/sec)."""
+    mapInArrow + broadcast.  Returns (seconds, points/sec)."""
     import numpy as np
 
     from spark_streaming_clustering_spark.streaming.estep import compute_point_stats

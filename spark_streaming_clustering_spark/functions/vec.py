@@ -49,10 +49,6 @@ def vadd(u: ColumnOrName, v: ColumnOrName) -> Column:
     return F.zip_with(_c(u), _c(v), lambda x, y: x + y)
 
 
-def vsub(u: ColumnOrName, v: ColumnOrName) -> Column:
-    return F.zip_with(_c(u), _c(v), lambda x, y: x - y)
-
-
 def axpy(a, x: ColumnOrName, y: ColumnOrName) -> Column:
     """a*x + y element-wise."""
     a = F.lit(a) if not isinstance(a, Column) else a

@@ -71,7 +71,7 @@ def _point_batches(spark: SparkSession, sf_dir: str, n_batches: int = 10):
         )
         # bounded collect: embeddings is the fixture's smallest table
         # (<=2000 rows at every sf); the distributed-scale path is the
-        # mapInPandas E-step (estep.py), not this replay harness
+        # mapInArrow E-step (estep.py), not this replay harness
         rows = emb.orderBy("id").collect()
         per = max(len(rows) // n_batches, 2)
         cached = []

@@ -7,8 +7,9 @@ quirks — they shape the golden outputs:
 * node ids are ``len(nodes)+1`` at creation and NOT positionally
   stable after deletions; the graph algebra indexes by position
   (batchStreamModel.scala:57,277).
-* ``upGlobalErrors`` has an inverted guard and is a no-op in practice
-  (batchStreamModel.scala:257) — preserved, not "fixed".
+* ``upGlobalErrors`` has an inverted guard whose only live arm indexes
+  past the error array (batchStreamModel.scala:257); it is a no-op
+  here, so its error sums are never applied, as in the reference.
 * ``addNewNodes`` picks the neighbor f by searching the max neighbor
   error value in the GLOBAL error array (``errors.indexOf``), so an
   equal-valued non-neighbor earlier in the array wins the lookup
@@ -37,6 +38,7 @@ from dataclasses import dataclass, field
 
 import numpy as np
 
+from .idset import IdSet
 from .params import GStreamParams
 
 
@@ -45,7 +47,7 @@ class Prototype:
     """Archived node snapshot (reference `prototype`, pointObj.scala:22-26)."""
 
     vector: np.ndarray
-    ids: set[int]
+    ids: IdSet
     node_id: int
 
     def to_string_proto(self) -> str:
@@ -64,7 +66,7 @@ class PointStats:
     sum_d2: float
     sum_vec: np.ndarray
     count: int
-    ids: set[int]
+    ids: IdSet
 
 
 class GStreamModel:
@@ -72,7 +74,7 @@ class GStreamModel:
         self.p = params or GStreamParams()
         self.nodes: np.ndarray = np.zeros((0, 0))  # (n, dim) centroid matrix
         self.node_ids: list[int] = []
-        self.point_ids: list[set[int]] = []
+        self.point_ids: list[IdSet] = []
         self.edges: np.ndarray = np.zeros((0, 0), dtype=np.int64)
         self.ages: np.ndarray = np.zeros((0, 0))
         self.errors: np.ndarray = np.zeros(0)
@@ -86,7 +88,7 @@ class GStreamModel:
         n2 = np.asarray(n2, dtype=np.float64)
         self.nodes = np.vstack([n1, n2])
         self.node_ids = [1, 2]  # nodes.length+1 at each append
-        self.point_ids = [{id_point}, {id_point + 1}]
+        self.point_ids = [IdSet([id_point]), IdSet([id_point + 1])]
         self.edges = np.array([[0, 1], [1, 0]], dtype=np.int64)
         self.ages = np.array([[np.nan, 0.0], [0.0, np.nan]])
         self.errors = np.zeros(2)
@@ -180,18 +182,20 @@ class GStreamModel:
         for j in range(self.n_nodes - 1, -1, -1):
             if not self.edges[j].any():
                 self.isolated_nodes.append(
-                    Prototype(self.nodes[j].copy(), set(self.point_ids[j]), self.node_ids[j])
+                    Prototype(self.nodes[j].copy(), IdSet(self.point_ids[j]), self.node_ids[j])
                 )
                 self._delete_node(j)
 
     # --- B6: upGlobalErrors (batchStreamModel.scala:254-260) --------------
     def up_global_errors(self, point_stats: dict[int, PointStats]) -> None:
-        # The reference's guard `if (this.errors.size < er._1)` is inverted
-        # (labels are valid indices, so it is ~always false): a no-op in
-        # practice.  Preserved verbatim — do NOT "fix".
-        for label, st in point_stats.items():
-            if len(self.errors) < label:
-                self.errors[label] += st.sum_d2  # pragma: no cover (quirk arm)
+        """No-op, by design.  The reference's guard
+        ``if (this.errors.size < er._1)`` is inverted: it passes only
+        when ``er._1`` is past the end of the array, where
+        ``errors(er._1) += ...`` throws.  That arm is reachable once
+        ``remove_isolated_nodes`` has shrunk the arrays below a winner's
+        position; here nothing is indexed and ``errors`` is left
+        unchanged, so the error sums are never applied, as in the
+        reference's non-throwing runs."""
 
     # --- B7: fading (batchStreamModel.scala:309-327) ----------------------
     def fading(self) -> None:
@@ -202,7 +206,7 @@ class GStreamModel:
             self.outdated_nodes.append(
                 Prototype(
                     self.nodes[smallest].copy(),
-                    set(self.point_ids[smallest]),
+                    IdSet(self.point_ids[smallest]),
                     self.node_ids[smallest],
                 )
             )
@@ -223,7 +227,7 @@ class GStreamModel:
             f = int(np.flatnonzero(self.errors == max_nb_err)[0])
 
             mid = 0.5 * (self.nodes[q] + self.nodes[f])
-            self._append_node(mid, set(), len(self.node_ids) + 1)
+            self._append_node(mid, IdSet(), len(self.node_ids) + 1)
 
             self.edges[q, f] = 0
             self.edges[f, q] = 0
@@ -241,7 +245,7 @@ class GStreamModel:
             self.errors[-1] = self.errors[q] + self.errors[f]  # post-scaling
 
     # --- B9: matrix grow/shrink (batchStreamModel.scala:347-381) ----------
-    def _append_node(self, vec: np.ndarray, ids: set[int], node_id: int) -> None:
+    def _append_node(self, vec: np.ndarray, ids: IdSet, node_id: int) -> None:
         self.nodes = np.vstack([self.nodes, vec])
         self.node_ids.append(node_id)
         self.point_ids.append(ids)

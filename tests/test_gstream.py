@@ -133,6 +133,20 @@ def test_up_global_errors_is_noop():
     np.testing.assert_array_equal(m.errors, before)
 
 
+def test_up_global_errors_ignores_labels_past_a_shrunk_model():
+    """remove_isolated_nodes can shrink the arrays below a winner
+    position from the E-step; the inverted-guard arm (label past the
+    end) must neither raise nor touch errors."""
+    m = fresh_model()
+    m._append_node(np.array([5.0, 5.0]), set(), 3)  # no edges: isolated
+    st = {2: stats({0: 1}, 7.0, [5.0, 5.0], 1, [9]), 3: stats({0: 1}, 3.0, [5.0, 5.0], 1, [8])}
+    m.remove_isolated_nodes()
+    assert m.n_nodes == 2 and max(st) > len(m.errors)
+    before = m.errors.copy()
+    m.up_global_errors(st)
+    np.testing.assert_array_equal(m.errors, before)
+
+
 def test_fading_removes_at_most_one():
     m = fresh_model(min_weight=1.0)
     m._append_node(np.array([5.0, 5.0]), set(), 3)

@@ -391,6 +391,101 @@ def test_estep_columnar_matches_array_path(spark, sf_dir):
         np.testing.assert_allclose(a[k].sum_d2, b[k].sum_d2, rtol=1e-9)
 
 
+def test_estep_empty_batch_returns_empty(spark):
+    from spark_streaming_clustering_spark.streaming.estep import compute_point_stats
+
+    empty = spark.createDataFrame([], "features array<double>, id long")
+    assert compute_point_stats(empty, np.zeros((3, 2))) == {}
+
+
+def test_estep_partition_spanning_arrow_batches_matches_local(spark, sf_dir):
+    """A partition read as many small Arrow batches is still reduced as
+    one partition, and matches the local E-step."""
+    from spark_streaming_clustering_spark.streaming.estep import (
+        compute_point_stats,
+        estep_local,
+    )
+
+    emb = load_table(spark, sf_dir, "embeddings").select(
+        F.transform("embedding", lambda x: x.cast("double")).alias("features"),
+        F.col("vec_id").alias("id"),
+    ).limit(300).coalesce(1)
+    centroids = np.stack([np.asarray(r.features) for r in emb.limit(5).collect()])
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "16")
+    try:
+        dist = compute_point_stats(emb, centroids)
+    finally:
+        spark.conf.set(key, before)
+    pdf = emb.toPandas()
+    loc = estep_local(np.stack(pdf["features"].to_numpy()), pdf["id"].to_numpy(), centroids)
+    assert set(dist) == set(loc)
+    for k in dist:
+        a, b = dist[k], loc[k]
+        assert a.count == b.count
+        assert a.ids == b.ids
+        assert dict(a.bmu2_counts) == dict(b.bmu2_counts)
+        np.testing.assert_allclose(a.sum_vec, b.sum_vec, rtol=1e-9)
+        assert abs(a.sum_d2 - b.sum_d2) <= 1e-6 * max(abs(a.sum_d2), 1.0)
+
+
+def test_partial_stats_emits_one_row_per_pair_per_partition():
+    """The executor function concatenates a partition's Arrow batches:
+    one output batch, one row per observed (bmu1, bmu2)."""
+    from types import SimpleNamespace
+
+    import pyarrow as pa
+
+    from spark_streaming_clustering_spark.streaming.estep import _partial_stats
+
+    rng = np.random.default_rng(7)
+    x = rng.normal(size=(90, 2))
+    cent = rng.normal(size=(4, 2))
+    batches = [
+        pa.RecordBatch.from_pydict(
+            {"features": x[lo:lo + 30].tolist(), "id": list(range(lo, lo + 30))}
+        )
+        for lo in (0, 30, 60)
+    ]
+    out = list(_partial_stats(iter(batches), SimpleNamespace(value=cent)))
+    assert len(out) == 1
+    pairs = list(zip(out[0].column("bmu1").to_pylist(), out[0].column("bmu2").to_pylist()))
+    assert len(pairs) == len(set(pairs))
+    assert sum(out[0].column("cnt").to_pylist()) == 90
+    assert sorted(i for ids in out[0].column("ids").to_pylist() for i in ids) == list(range(90))
+    assert list(_partial_stats(iter([]), SimpleNamespace(value=cent))) == []
+
+
+@pytest.mark.parametrize(
+    "rows, dim, found",
+    [
+        ([[1.0, 2.0, 3.0], [4.0, 5.0, 6.0]], 4, "widths [3]"),
+        # 6 values would reshape silently into two rows of 3
+        ([[1.0, 2.0, 3.0, 4.0], [5.0, 6.0]], 3, "widths [2, 4]"),
+        ([[1.0, 2.0, 3.0], None], 3, "1 null rows"),
+    ],
+)
+def test_estep_rejects_rows_of_the_wrong_width(spark, rows, dim, found):
+    import re
+
+    from spark_streaming_clustering_spark.streaming.estep import compute_point_stats
+
+    df = spark.createDataFrame(
+        [(r, i) for i, r in enumerate(rows)], "features array<double>, id long"
+    ).coalesce(1)
+    msg = (f"ValueError: E-step: expected {dim} features per row "
+           f"(the centroid dimension), found {found}")
+    with pytest.raises(Exception, match=re.escape(msg)):
+        compute_point_stats(df, np.zeros((3, dim)))
+
+
+def test_estep_local_rejects_rows_of_the_wrong_width():
+    from spark_streaming_clustering_spark.streaming.estep import estep_local
+
+    with pytest.raises(ValueError, match="expected 4 features per row"):
+        estep_local(np.zeros((2, 3)), np.arange(2), np.zeros((3, 4)))
+
 def test_watermark_drops_late_data(spark, tmp_path):
     """Event-time semantics the reference lacks entirely: once the
     watermark has advanced past a window and the window was emitted

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from ..sources.points import stream_points
 from ..sources.tables import load_table, scratch_dir
 from ..streaming.params import GStreamParams
-from ..streaming.train import GStreamTrainer
+from ..streaming.train import SNAPSHOT_SCHEMAS, GStreamTrainer, local_frame
 from .registry import register
 
 
@@ -135,7 +135,7 @@ def gstream_epoch(spark: SparkSession, sf_dir: str) -> DataFrame:
     trainer.step(first)
     trainer.fit_batches(batches)
     rows = trainer.model.snapshot_tables()["prototypes"]
-    proto = spark.createDataFrame(rows, "node_id long, vector array<double>")
+    proto = local_frame(spark, rows, SNAPSHOT_SCHEMAS["Prototypes"])
     return _proto_summary(proto)
 
 
@@ -209,7 +209,7 @@ def streaming_file_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     _await_finished(q)
     rows = trainer.model.snapshot_tables()["prototypes"]
-    proto = spark.createDataFrame(rows, "node_id long, vector array<double>")
+    proto = local_frame(spark, rows, SNAPSHOT_SCHEMAS["Prototypes"])
     return _proto_summary(proto)
 
 

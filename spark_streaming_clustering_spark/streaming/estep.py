@@ -24,12 +24,18 @@ entirely — partials flow straight to the driver (bounded by N^2 per
 partition, N <= ~300).  At 100 TB the same plan holds: the batch scan
 is the only heavy stage and it is embarrassingly parallel.
 
-Latency: a Spark job costs ~200 ms of scheduling on this host, so for
-small micro-batches (the reference's measured regime is ~100 points per
-100 ms window) the trainer uses ``estep_local`` — zero Spark jobs — and
-only falls back to the distributed plan when a batch exceeds the
-small-batch threshold.  The reference has the same topology: its
-per-batch work at this scale is driver-bound too.
+Latency: a Spark job costs ~200 ms of scheduling on a small local
+master, so for small micro-batches (the reference's measured regime is
+~100 points per 100 ms window) the trainer runs ``estep_local``, which
+starts no Spark job, and only falls back to the distributed plan when a
+batch exceeds the small-batch threshold.  The probe that decides is a
+job of its own for Spark input: ``limit(n).toPandas()`` over
+multi-partition input runs two stages, a local limit on every partition
+and then a shuffle to one partition.  A small batch thus costs one job,
+a large one two (perfbench ``bulk_distributed``, 4 partitions: 2 jobs,
+3 stages and 9 tasks per step); pandas input skips the probe.  The
+reference has the same topology: its per-batch work at this scale is
+driver-bound too.
 
 Tie semantics: the reference sorts (distance, index) pairs, so equal
 distances resolve to the lower node position (findTwoNearestPointDist1L,
@@ -178,8 +184,17 @@ def _width_error(dim: int, found) -> ValueError:
     )
 
 
+def _check_finite(x: np.ndarray) -> None:
+    """Raise ``ValueError`` on NaN or infinite features: the kernel
+    would still give such a row a winner, and its sums would poison
+    that centroid for good."""
+    if not np.isfinite(x).all():
+        bad = int((~np.isfinite(x)).any(axis=1).sum())
+        raise ValueError(f"E-step: {bad} rows hold NaN or infinite feature values")
+
+
 def estep_local(x: np.ndarray, ids: np.ndarray, centroids: np.ndarray) -> dict[int, PointStats]:
-    """Driver-local E-step over an in-memory batch — zero Spark jobs.
+    """Driver-local E-step over an in-memory batch; starts no Spark job.
 
     The distributed path's kernel, grouping and merge over one
     in-memory "partition", used for micro-batches below the trainer's
@@ -188,6 +203,7 @@ def estep_local(x: np.ndarray, ids: np.ndarray, centroids: np.ndarray) -> dict[i
     x = np.ascontiguousarray(x, dtype=np.float64)
     if x.shape[1] != centroids.shape[1]:
         raise _width_error(centroids.shape[1], x.shape[1])
+    _check_finite(x)
     partials = _group_partials(
         x, np.asarray(ids, dtype=np.int64), *_assign_top2(x, centroids), len(centroids)
     )
@@ -201,20 +217,23 @@ def _features(batch: pa.RecordBatch, dim: int, feature_cols) -> np.ndarray:
     buffer, which is only sound when every row holds exactly ``dim``
     values: ragged rows, null rows or a width other than the centroid
     dimension raise ``ValueError`` instead of silently shifting values
-    across rows."""
+    across rows, and so do NaN, infinite or null feature values."""
     if feature_cols is not None:
         if len(feature_cols) != dim:
             raise _width_error(dim, len(feature_cols))
-        return np.column_stack(
+        x = np.column_stack(
             [batch.column(c).to_numpy(zero_copy_only=False) for c in feature_cols]
         ).astype(np.float64, copy=False)
-    col = batch.column("features")
-    if col.null_count:
-        raise _width_error(dim, f"{col.null_count} null rows")
-    widths = np.unique(np.diff(col.offsets.to_numpy())).tolist()
-    if widths != [dim]:
-        raise _width_error(dim, f"widths {widths}")
-    return col.flatten().to_numpy(zero_copy_only=False).reshape(-1, dim)
+    else:
+        col = batch.column("features")
+        if col.null_count:
+            raise _width_error(dim, f"{col.null_count} null rows")
+        widths = np.unique(np.diff(col.offsets.to_numpy())).tolist()
+        if widths != [dim]:
+            raise _width_error(dim, f"widths {widths}")
+        x = col.flatten().to_numpy(zero_copy_only=False).reshape(-1, dim)
+    _check_finite(x)
+    return x
 
 
 def _list_array(offsets: np.ndarray, values: np.ndarray) -> pa.ListArray:

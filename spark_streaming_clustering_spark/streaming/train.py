@@ -16,6 +16,7 @@ from collections.abc import Iterable
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 from .estep import compute_point_stats, estep_local
@@ -69,28 +70,59 @@ def write_snapshot_text(model: GStreamModel, out_dir: str, kk: int,
             f.write("\n".join(lines) + ("\n" if lines else ""))
 
 
+_VECTOR = pa.list_(pa.float64())
+
+# Arrow schema of each parquet snapshot family.  Spark reads int64,
+# int32 and float64 as long, int and double; every column and array
+# element is nullable.
+SNAPSHOT_SCHEMAS = {
+    "Prototypes": pa.schema([("node_id", pa.int64()), ("vector", _VECTOR)]),
+    "OutdatedProtos": pa.schema([("node_id", pa.int64()), ("vector", _VECTOR)]),
+    "Edges": pa.schema([("src", pa.int64()), ("dst", pa.int64())]),
+    "Weights": pa.schema([("node_id", pa.int64()), ("weight", pa.float64())]),
+    "timeUpdates": pa.schema([("batch", pa.int32()), ("cum_ms", pa.int64())]),
+}
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], schema: pa.Schema) -> DataFrame:
+    """Driver-side rows as a DataFrame over a JVM-local relation.
+
+    The rows travel as one ``pyarrow.Table``, which Spark keeps as a
+    ``LocalRelation`` (plan leaf ``LocalTableScan``), so nothing that
+    reads the frame starts a Python worker.  A list of tuples would
+    instead be parallelized as a Python RDD whose every slice pays a
+    Python worker's per-task setup.  For small row sets bounded by the
+    model size: snapshots and summaries."""
+    columns = zip(*rows) if rows else [[] for _ in schema]
+    return spark.createDataFrame(pa.Table.from_arrays(
+        [pa.array(col, type=field.type) for col, field in zip(columns, schema)],
+        schema=schema,
+    ))
+
+
 def write_snapshot(spark: SparkSession, model: GStreamModel, out_dir: str, kk: int,
                    time_updates: list[int], first_batch: int = 0) -> None:
     """Snapshot families as parquet (reference writes text, batchStream.scala:97-101).
+
+    Each family is built as an Arrow table with its ``SNAPSHOT_SCHEMAS``
+    entry (``local_frame``) and written as one file under
+    ``<out_dir>/<family>-<kk>``, so a snapshot is five JVM-only write
+    jobs and starts no Python worker.
 
     ``first_batch`` is the absolute batch index of the capped timing
     buffer's head, so the ``batch`` column stays truthful after the
     B11 ring buffer starts dropping its front (the reference writes
     raw values with no index at all)."""
     tables = model.snapshot_tables()
-    specs = {
-        "Prototypes": (tables["prototypes"], "node_id long, vector array<double>"),
-        "OutdatedProtos": (tables["outdated_protos"], "node_id long, vector array<double>"),
-        "Edges": (tables["edges"], "src long, dst long"),
-        "Weights": (tables["weights"], "node_id long, weight double"),
-        "timeUpdates": (
-            list(enumerate(time_updates, start=first_batch)),
-            "batch int, cum_ms long",
-        ),
+    rows = {
+        "Prototypes": tables["prototypes"],
+        "OutdatedProtos": tables["outdated_protos"],
+        "Edges": tables["edges"],
+        "Weights": tables["weights"],
+        "timeUpdates": list(enumerate(time_updates, start=first_batch)),
     }
-    for family, (rows, schema) in specs.items():
-        df = spark.createDataFrame(rows, schema) if rows else spark.createDataFrame([], schema)
-        df.coalesce(1).write.mode("overwrite").parquet(
+    for family, schema in SNAPSHOT_SCHEMAS.items():
+        local_frame(spark, rows[family], schema).coalesce(1).write.mode("overwrite").parquet(
             os.path.join(out_dir, f"{family}-{kk}")
         )
 
@@ -121,8 +153,10 @@ class GStreamTrainer:
         self.time_updates: list[int] = [0]  # cumulative ms, B11
         self.time_updates_base = 0  # absolute batch index of the buffer head
         # Batches at or below this row count run the E-step driver-local
-        # (estep_local, zero Spark jobs); above it, distributed
-        # compute_point_stats.  Probing costs one cheap limit() job.
+        # (estep_local, no Spark job); above it, distributed
+        # compute_point_stats.  Spark input is first probed with
+        # limit(n).toPandas(), a job of two stages on multi-partition
+        # input (a local limit per partition, then a shuffle to one).
         self.small_batch_rows = small_batch_rows
 
     def init_from_seed(self, seed: DataFrame | pd.DataFrame) -> "GStreamTrainer":
@@ -140,10 +174,10 @@ class GStreamTrainer:
 
         Accepts a Spark DataFrame (columns features array<double>, id
         long) or an in-memory pandas batch with the same columns.  Spark
-        input is probed with ``limit(small_batch_rows+1)`` — this doubles
-        as the reference's ``count()>0`` empty guard — and small batches
-        take the driver-local E-step; only genuinely large batches pay a
-        distributed pass.
+        input is probed with ``limit(small_batch_rows+1).toPandas()`` — one
+        Spark job, which doubles as the reference's ``count()>0`` empty
+        guard — and small batches take the driver-local E-step; only
+        genuinely large batches pay a second, distributed job.
         """
         t0 = time.monotonic()
         pdf: pd.DataFrame | None

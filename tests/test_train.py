@@ -87,6 +87,95 @@ def test_snapshots_written(spark, sf_dir, tmp_path):
     assert protos.columns == ["node_id", "vector"]
 
 
+def _snapshot_trainer(milestones):
+    """Driver-local training on pandas batches, handing out the trainer
+    at each milestone kk; fading is ungated so nodes get archived."""
+    import pandas as pd
+
+    rng = np.random.default_rng(3)
+    tr = GStreamTrainer(None, GStreamParams(fading_min_nodes=2))
+    tr.init_from_seed(pd.DataFrame({"features": list(rng.normal(size=(2, 3)))}))
+    for kk in range(1, max(milestones) + 1):
+        x = rng.normal(size=(20, 3)) + rng.integers(0, 3, size=(20, 1)) * 4
+        tr.step(pd.DataFrame({"features": list(x), "id": np.arange(kk * 20, kk * 20 + 20)}))
+        if kk in milestones:
+            yield kk, tr
+
+
+_SNAPSHOT_DDL = {
+    "Prototypes": "node_id long, vector array<double>",
+    "OutdatedProtos": "node_id long, vector array<double>",
+    "Edges": "src long, dst long",
+    "Weights": "node_id long, weight double",
+    "timeUpdates": "batch int, cum_ms long",
+}
+
+
+def test_snapshot_sink_parity(spark, tmp_path):
+    """Every parquet family reads back with the column names, Spark
+    types, nullability and rows of the model's snapshot tables and the
+    timing buffer: at kk=1 (no outdated nodes yet) and at kk=105 (nodes
+    archived, and the capped buffer's head past batch 0)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import DataType
+
+    from spark_streaming_clustering_spark.streaming.train import write_snapshot
+
+    out = str(tmp_path / "snaps")
+    seen = {}
+    for kk, tr in _snapshot_trainer((1, 105)):
+        write_snapshot(spark, tr.model, out, kk, tr.time_updates, tr.time_updates_base)
+        tables = tr.model.snapshot_tables()
+        expected = {
+            "Prototypes": tables["prototypes"],
+            "OutdatedProtos": tables["outdated_protos"],
+            "Edges": tables["edges"],
+            "Weights": tables["weights"],
+            "timeUpdates": list(enumerate(tr.time_updates, start=tr.time_updates_base)),
+        }
+        for family, ddl in _SNAPSHOT_DDL.items():
+            path = os.path.join(out, f"{family}-{kk}")
+            df = spark.read.parquet(path)
+            assert df.schema == DataType.fromDDL(ddl), family
+            assert [tuple(r) for r in df.collect()] == expected[family], family
+            # Spark reads every parquet column back as nullable, so the
+            # nullability written is checked in the file itself
+            (part,) = glob.glob(os.path.join(path, "*.parquet"))
+            fields = list(pq.read_schema(part))
+            fields += [f.type.value_field for f in fields if pa.types.is_list(f.type)]
+            assert all(f.nullable for f in fields), family
+        seen[kk] = (len(expected["OutdatedProtos"]), tr.time_updates_base)
+    assert seen[1] == (0, 0)
+    assert seen[105][0] > 0 and seen[105][1] > 0
+
+
+def test_snapshot_sink_scans_a_local_relation(spark, tmp_path, monkeypatch, capsys):
+    """Each frame the sink writes reads a JVM-local relation: a
+    ``LocalTableScan`` leaf, not a Python RDD (``Scan ExistingRDD``)
+    whose slices would each start a Python worker task."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from spark_streaming_clustering_spark.streaming.train import write_snapshot
+
+    written = []
+    coalesce = DataFrame.coalesce
+
+    def recording_coalesce(self, n):
+        written.append(coalesce(self, n))
+        return written[-1]
+
+    monkeypatch.setattr(DataFrame, "coalesce", recording_coalesce)
+    _, tr = next(_snapshot_trainer((6,)))
+    write_snapshot(spark, tr.model, str(tmp_path / "snaps"), 6, tr.time_updates)
+    assert len(written) == len(_SNAPSHOT_DDL)
+    for df in written:
+        capsys.readouterr()
+        df.explain()
+        plan = capsys.readouterr().out
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+
+
 def test_csv_point_roundtrip(spark, tmp_path):
     p = tmp_path / "pts.csv"
     p.write_text("1.5,2.5,1,1\n3.5,4.5,2,2\n")
@@ -485,6 +574,46 @@ def test_estep_local_rejects_rows_of_the_wrong_width():
 
     with pytest.raises(ValueError, match="expected 4 features per row"):
         estep_local(np.zeros((2, 3)), np.arange(2), np.zeros((3, 4)))
+
+
+@pytest.mark.parametrize("bad", [float("nan"), float("inf")])
+def test_estep_rejects_non_finite_features(spark, bad):
+    """A NaN or infinite feature fails the distributed E-step instead of
+    being assigned a winner whose centroid it would poison."""
+    from spark_streaming_clustering_spark.streaming.estep import compute_point_stats
+
+    df = spark.createDataFrame(
+        [([1.0, 2.0, 3.0], 0), ([4.0, bad, 6.0], 1)], "features array<double>, id long"
+    ).coalesce(1)
+    with pytest.raises(Exception, match="ValueError: E-step: 1 rows hold NaN or infinite"):
+        compute_point_stats(df, np.zeros((3, 3)))
+
+
+@pytest.mark.parametrize("bad", [float("nan"), float("-inf"), None])
+def test_features_rejects_non_finite_scalar_columns(bad):
+    """The columnar layout (one scalar column per dimension) checks its
+    values too; a null scalar reads as NaN."""
+    import pyarrow as pa
+
+    from spark_streaming_clustering_spark.streaming.estep import _features
+
+    batch = pa.RecordBatch.from_pydict(
+        {"c0": [1.0, 2.0], "c1": [bad, 3.0], "id": [0, 1]},
+        schema=pa.schema([("c0", pa.float64()), ("c1", pa.float64()), ("id", pa.int64())]),
+    )
+    with pytest.raises(ValueError, match="1 rows hold NaN or infinite"):
+        _features(batch, 2, ["c0", "c1"])
+
+
+@pytest.mark.parametrize("bad", [float("nan"), float("inf"), float("-inf")])
+def test_estep_local_rejects_non_finite_features(bad):
+    from spark_streaming_clustering_spark.streaming.estep import estep_local
+
+    x = np.ones((3, 4))
+    x[1, 2] = bad
+    with pytest.raises(ValueError, match="1 rows hold NaN or infinite"):
+        estep_local(x, np.arange(3), np.zeros((2, 4)))
+
 
 def test_watermark_drops_late_data(spark, tmp_path):
     """Event-time semantics the reference lacks entirely: once the
